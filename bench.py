@@ -1,9 +1,10 @@
 """Benchmark harness (driver contract).
 
 Runs every driver-contract query at ``$SPARK_GRAFT_SF_DIR`` (default
-``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default 32)
-and the north-rule parse→enrich→route→aggregate pipeline over a
-deterministic generated pages table, then prints ONE JSON line::
+``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` (default:
+``os.cpu_count()``) and the north-rule parse→enrich→route→aggregate
+pipeline over a deterministic generated pages table, then prints ONE
+JSON line::
 
     {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
@@ -61,7 +62,7 @@ def run_noop(df) -> None:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     sf = _sf_of(sf_dir)
 
     spark = build_session(

@@ -26,7 +26,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import SEVERITIES
 
@@ -298,10 +297,6 @@ def device_dim(spark: SparkSession, n_hosts: int = 1000) -> DataFrame:
         for i in range(n_hosts)
     ]
     return spark.createDataFrame(rows, "hostname string, site string, model string")
-
-
-def events_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -120,6 +120,8 @@ def decode_png(blob: bytes) -> np.ndarray:
             raise ValueError(f"PNG chunk {tag!r} CRC mismatch")
         pos += 12 + length
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError(f"PNG IHDR payload is {length} bytes, not 13")
             ihdr = struct.unpack(">IIBBBBB", payload)
         elif tag == b"PLTE":
             plte = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)

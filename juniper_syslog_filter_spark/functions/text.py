@@ -198,11 +198,6 @@ def bpe_token_count_sql(expr: str) -> str:
     return f"len(regexp_extract_all({expr}, '\\w+|[^\\w\\s]'))"
 
 
-def ws_token_count(col: Column) -> Column:
-    """Whitespace token count (the t1 driver query's tokenizer)."""
-    return F.size(F.split(col, " "))
-
-
 # ---------------------------------------------------------------------------
 # Quality-filter rule cascade (C4 / Gopher style).
 # ---------------------------------------------------------------------------

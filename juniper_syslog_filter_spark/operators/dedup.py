@@ -121,24 +121,8 @@ def jaccard_sql(a: str, b: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def minhash_for_band_row(shingles: Column, band: int, row: int) -> Column:
-    """One min-hash value: min over shingles of md5 with a (band,row)
-    seed prefix. Hex-string min == numeric min of the 128-bit hash, and
-    is engine-identical."""
-    seed = f"{band}:{row}:"
-    return F.array_min(F.transform(shingles, lambda s: F.md5(F.concat(F.lit(seed), s))))
-
-
 def minhash_for_band_row_sql(shingles: str, band: int, row: int) -> str:
     return f"list_min(list_transform({shingles}, s -> md5('{band}:{row}:' || s)))"
-
-
-def band_bucket(shingles: Column, band: int, rows_per_band: int) -> Column:
-    """LSH bucket id for one band: md5 of the concatenated row minhashes."""
-    sig = F.concat_ws(
-        "|", *[minhash_for_band_row(shingles, band, r) for r in range(rows_per_band)]
-    )
-    return F.md5(sig)
 
 
 def band_bucket_sql(shingles: str, band: int, rows_per_band: int) -> str:
@@ -370,27 +354,6 @@ def sig_jaccard_udf():
     return F.pandas_udf(fn, "double")
 
 
-def shingle_jaccard_udf(k: int = 8):
-    """Arrow-vectorized exact Jaccard of char-k shingle sets of two text
-    columns. Pairwise two-arg (text_a, text_b) form for spot checks ONLY
-    — it is NOT compatible with :func:`verify_pairs_jaccard`, whose
-    ``sig_udf`` parameter takes a one-arg text→int64-array fingerprint
-    UDF (:func:`shingle_sig_udf`). For bulk verification use
-    ``verify_pairs_jaccard(df, cand, id, text, shingle_sig_udf(k), t)``.
-    Set math == ``jaccard(char_shingles(a), char_shingles(b))`` (and the
-    :func:`jaccard_sql` twin) exactly."""
-
-    def fn(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = np.empty(len(ta), dtype=np.float64)
-        for i, (a, b) in enumerate(zip(ta, tb)):
-            sa = _py_char_shingles(a, k)
-            sb = _py_char_shingles(b, k)
-            out[i] = len(sa & sb) / len(sa | sb)
-        return pd.Series(out)
-
-    return F.pandas_udf(fn, "double")
-
-
 def _py_word_ngrams(text: str, n: int) -> set[str]:
     """Python twin of :func:`word_ngrams` (set form). ``split(col, ' ')``
     keeps empty tokens (Java ``split(re, -1)``), exactly like
@@ -401,24 +364,6 @@ def _py_word_ngrams(text: str, n: int) -> set[str]:
     if len(toks) < n:
         return {" ".join(toks)}
     return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-
-
-def word_ngram_jaccard_udf(n: int = 2):
-    """Arrow-vectorized exact Jaccard of word n-gram sets. Pairwise
-    two-arg (text_a, text_b) form for spot checks ONLY — NOT compatible
-    with :func:`verify_pairs_jaccard` (whose ``sig_udf`` is the one-arg
-    :func:`word_ngram_sig_udf`). Twin of
-    ``jaccard(word_ngrams(a), word_ngrams(b))`` / the SQL builders."""
-
-    def fn(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        out = np.empty(len(ta), dtype=np.float64)
-        for i, (a, b) in enumerate(zip(ta, tb)):
-            sa = _py_word_ngrams(a, n)
-            sb = _py_word_ngrams(b, n)
-            out[i] = len(sa & sb) / len(sa | sb)
-        return pd.Series(out)
-
-    return F.pandas_udf(fn, "double")
 
 
 def verify_pairs_sig(sig: DataFrame, cand: DataFrame, threshold: float) -> DataFrame:
@@ -1210,11 +1155,11 @@ def paragraph_dedup(
     level dedup: repeated nav bars / license blocks / disclaimers
     vanish from every copy but the first while unique prose stays.
 
-    The fixture corpus has no newline structure, so a "paragraph" here
-    is a fixed ``chunk_words``-word window (position-aligned chunking —
-    deterministic and SQL-restatable); on real crawl text the splitter
-    is ``split(text, '\\n\\n')`` with the rest of the dataflow
-    unchanged.
+    A "paragraph" is a fixed ``chunk_words``-word window of the
+    space-split text (position-aligned chunking — deterministic and
+    SQL-restatable). There is no newline splitter: CCNet splits on
+    newlines, but the fixture corpus has no newline structure, and this
+    function chunks every input by word count.
 
     Returns ``(id, n_par, n_kept, kept_text)``; docs with empty text
     are excluded (no paragraphs).

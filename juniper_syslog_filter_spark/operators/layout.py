@@ -33,7 +33,8 @@ value-exact across engines.
 
 Reference parity: no layout surface exists in the reference (its
 "layout" is 800k-row CSV chunks, modules/merge_files.py:96-111); this
-belongs to the added web-scale family.
+belongs to the added web-scale family, as does :func:`merge_upsert`, the
+MERGE INTO dataflow that rewrites such a table.
 """
 
 from __future__ import annotations
@@ -99,3 +100,26 @@ def zorder_layout_stats(
             F.max("_y").alias("y_max"),
         )
     )
+
+
+def merge_upsert(base: DataFrame, changes: DataFrame, key_cols: list[str]) -> DataFrame:
+    """MERGE INTO semantics as a dataflow: WHEN MATCHED THEN UPDATE
+    (the change row replaces the base row wholesale), WHEN NOT MATCHED
+    THEN INSERT. ``changes`` must carry at most one row per key (the
+    caller compacts multi-change batches with keep-latest first — see
+    operators/history.scd2_intervals' sibling u2 compaction).
+
+    Shape: one left-anti join of base against the change KEYS (narrow
+    projection — no change payload crosses the shuffle) + UNION ALL.
+    Under AQE the anti side broadcasts whenever the change batch is
+    small relative to the base — the common case for incremental
+    upserts, making the whole MERGE map-side. This is the copy-on-write
+    MERGE dataflow inside Iceberg/Delta; against a real Iceberg
+    catalog, tables.write_table's overwritePartitions gives the
+    transactional commit, and only partitions containing matched keys
+    need rewriting.
+    """
+    survivors = base.join(
+        changes.select(*key_cols), on=key_cols, how="left_anti"
+    )
+    return survivors.unionByName(changes)

@@ -108,25 +108,6 @@ def start_routed_sink(
     return writer.start()
 
 
-def start_agg_sink(
-    agg: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Append-mode sink for the windowed aggregate (closed windows only,
-    as bounded by the watermark)."""
-    writer = (
-        agg.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def make_batch_writer(identifier: str, partition_cols: list[str] | None = None):
     """Build the ``foreachBatch`` function for :func:`start_table_sink` —
     exposed separately so tests can drive the replay path directly."""
@@ -187,8 +168,8 @@ def sessionize_stream(
 ) -> DataFrame:
     """Custom STATEFUL streaming operator via ``applyInPandasWithState``:
     30-min-gap sessionization per user — the streaming twin of the w1
-    batch query (driver_queries.q_w1_sessionize; same strictly-greater
-    microsecond gap test), but emitting full (start, end, n_events)
+    batch query (driver_queries.windows.q_w1_sessionize; same
+    strictly-greater microsecond gap test), but emitting full (start, end, n_events)
     session rows as they CLOSE instead of a final per-user count.
 
     Per micro-batch and key: sort the batch's event times, fold them

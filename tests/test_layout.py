@@ -8,10 +8,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from juniper_syslog_filter_spark.operators.layout import (
+    merge_upsert,
     morton_key,
     zorder_layout_stats,
 )
-from juniper_syslog_filter_spark.operators.merge import merge_upsert
 
 
 def _py_morton(x: int, y: int) -> int:

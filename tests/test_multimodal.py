@@ -141,7 +141,9 @@ def test_png_palette_and_error_paths():
     assert out.shape == (2, 2, 3)
     assert tuple(out[0, 0]) == (255, 0, 0) and tuple(out[1, 0]) == (0, 0, 255)
 
-    for bad in (b"nope", P.PNG_MAGIC, P.PNG_MAGIC + b"\x00" * 8):
+    # a CRC-valid IHDR whose payload is not 13 bytes
+    short_ihdr = P.PNG_MAGIC + P._chunk(b"IHDR", b"\x00" * 5)
+    for bad in (b"nope", P.PNG_MAGIC, P.PNG_MAGIC + b"\x00" * 8, short_ihdr):
         with _pytest.raises(ValueError):
             P.decode_png(bad)
     # corrupt one IDAT byte → CRC failure, not silent garbage
@@ -213,18 +215,19 @@ def test_undecodable_png_falls_back_not_crashes(spark):
 
     import numpy as np
 
-    from juniper_syslog_filter_spark.functions.png import PNG_MAGIC, encode_png
+    from juniper_syslog_filter_spark.functions.png import PNG_MAGIC, _chunk, encode_png
 
     good = encode_png(np.array([[1, 2], [3, 4]], dtype=np.uint8))
     truncated = good[: len(good) // 2]
     corrupt_magic_only = PNG_MAGIC + b"garbage"
+    short_ihdr = PNG_MAGIC + _chunk(b"IHDR", b"\x00" * 5)
     df = spark.createDataFrame(
-        [(1, good), (2, truncated), (3, corrupt_magic_only)],
+        [(1, good), (2, truncated), (3, corrupt_magic_only), (4, short_ihdr)],
         "doc_id long, content binary",
     )
     feats = {r.doc_id: list(r.feature) for r in M.extract_features(df).collect()}
     assert feats[1] == [2.0, 2.0, 1.0, 1.0, 4.0, 2.0, 1.0, 4.0]
-    for bad, blob in ((2, truncated), (3, corrupt_magic_only)):
+    for bad, blob in ((2, truncated), (3, corrupt_magic_only), (4, short_ihdr)):
         assert feats[bad] == M._fake_feature(_h.md5(blob).digest())
     rows = {r.doc_id: r for r in M.resize_media(df, factor=4).collect()}
     # bad blobs pool their FILE bytes, same as any non-image blob
@@ -232,3 +235,4 @@ def test_undecodable_png_falls_back_not_crashes(spark):
     n = len(a) // 4
     expect = list((a[: n * 4].reshape(n, 4).sum(1, dtype=np.int64) // 4)[:16])
     assert rows[2].pooled == [int(v) for v in expect]
+    assert set(rows) == {1, 2, 3, 4}

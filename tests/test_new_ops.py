@@ -834,7 +834,7 @@ def test_hl1_oracle_est_far_from_libm_boundary(spark, sf):
     unlikely."""
     import math
 
-    from juniper_syslog_filter_spark.driver_queries import (
+    from juniper_syslog_filter_spark.driver_queries.sketch import (
         q_hl1_hll_distinct,
     )
 
@@ -961,8 +961,8 @@ def test_bloom_no_false_negatives_and_matches_reference(spark):
 def test_bloom_null_probe_is_not_member(spark):
     """A NULL probe value reads bloom_hit = FALSE, not SQL NULL — the
     same pin the DuckDB twin applies via COALESCE, so bl1's oracle
-    contract survives a nullable text column (round-3 advice:
-    driver_queries.py:3325)."""
+    contract survives a nullable text column (round-3 advice on the bl1
+    oracle in driver_queries/sketch.py)."""
     from juniper_syslog_filter_spark.operators.sketch import (
         bloom_build,
         bloom_probe,
@@ -1030,7 +1030,7 @@ def test_a7_rank_certificate_on_skewed_values(spark):
     against numpy's linear interpolation (quantile_cont)."""
     import numpy as np
 
-    from juniper_syslog_filter_spark.driver_queries import (
+    from juniper_syslog_filter_spark.driver_queries.relational import (
         q_a7_approx_percentiles,
     )
 
@@ -1039,7 +1039,7 @@ def test_a7_rank_certificate_on_skewed_values(spark):
     df = spark.createDataFrame(rows, "event_type string, value double")
     df.createOrReplaceTempView("_a7_src")
 
-    import juniper_syslog_filter_spark.driver_queries as dq
+    import juniper_syslog_filter_spark.driver_queries.relational as dq
 
     orig = dq.load_table
     dq.load_table = lambda s, d, t: df  # the query only reads events

@@ -457,3 +457,44 @@ def test_url_canonicalize_is_map_only(spark):
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "WholeStageCodegen" in plan or "*(1)" in plan
+
+
+def test_keyword_prefilter_runs_before_python_parse(spark, tmp_path):
+    """parse_pages(keyword=...) must filter raw html bytes with a JVM
+    ``contains`` below MapInPandas, so non-matching pages never cross
+    into Python. Plans print top-down: below == later in the text."""
+    from juniper_syslog_filter_spark.functions.parse import parse_pages
+
+    pages = str(tmp_path / "pages")
+    write_pages(spark, pages, 1000, num_partitions=2)
+    plan = _plan(parse_pages(spark.read.parquet(pages), keyword="RT_IDP_ATTACK"))
+    below = plan[plan.index("MapInPandas"):].splitlines()
+    filt = next(line for line in below if "Filter (" in line)
+    assert "contains(html" in filt
+    assert "0x" + b"RT_IDP_ATTACK".hex().upper() in filt
+
+
+def test_minhash_lsh_pairs_no_nested_loop(spark):
+    """Near-dup verify: the bucket self-join and both signature joins are
+    hash joins — a nested-loop/cartesian anywhere here is quadratic."""
+    from juniper_syslog_filter_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = load_table(spark, SF, "documents")
+    plan = _plan(minhash_lsh_pairs(docs, "doc_id", "text", threshold=0.5))
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "CartesianProduct" not in plan
+
+
+def test_ivf_ann_broadcasts_and_takes_ordered(spark):
+    """IVF ANN: centroid and probe joins broadcast, the per-vector cell
+    argmax is a partial (map-side) max_by, the top-k is
+    TakeOrderedAndProject — no sort-merge join, no cartesian."""
+    from juniper_syslog_filter_spark.operators.similarity import ivf_ann_topk
+
+    emb = load_table(spark, SF, "embeddings")
+    qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
+    plan = _plan(ivf_ann_topk(emb.filter(F.col("vec_id") != 0), qv))
+    for op in ("TakeOrderedAndProject", "partial_max_by", "BroadcastHashJoin"):
+        assert op in plan
+    assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan

@@ -182,7 +182,7 @@ def test_t12_bigram_lm_matches_numpy(spark):
     cross-checked against a literal numpy/python restatement."""
     import math
 
-    from juniper_syslog_filter_spark import driver_queries as DQ
+    from juniper_syslog_filter_spark.driver_queries import text as DQ
 
     docs = spark.createDataFrame(
         [(0, "a b a b"), (1, "a b c"), (2, "c"), (3, "b a")],

@@ -1,7 +1,7 @@
 """URL-family driver queries: parse_url host census (h1), URL
 normalization dedup (d8), and keep-latest-per-key compaction (u2).
 Semantics are pinned against the closed-form structure of the
-synthesized url column (driver_queries._URL_SQL): host = doc_id mod 13
+synthesized url column (driver_queries.urlfilter._URL_SQL): host = doc_id mod 13
 (case folded), normalized url = (doc_id mod 13, doc_id mod 25), so ids
 exactly 325 apart — and only those — collide after normalization."""
 
@@ -36,7 +36,7 @@ def test_d8_normalization_strips_case_query_fragment_slash(spark):
         [(0, "x"), (325, "y")], "doc_id long, source string"
     ).withColumn("n_chars", F.lit(1)).withColumn("lang", F.lit("en"))
     # route the fixture through the same synthesis + census
-    from juniper_syslog_filter_spark import driver_queries as DQ
+    from juniper_syslog_filter_spark.driver_queries import urlfilter as DQ
 
     orig = DQ.load_table
     try:

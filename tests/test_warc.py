@@ -116,21 +116,28 @@ def test_read_warc_bad_gzip_isolated(spark, tmp_path):
 
 
 def test_wc1_matches_documents(spark, sf_dir):
-    """Fixture contract: wc1 rows == documents rows, text byte-exact."""
-    from juniper_syslog_filter_spark.driver_queries import q_wc1_warc_source
+    """Fixture contract: wc1 (whole-archive reader) and wc2 (CDX ranged
+    reader) rows == documents rows, text byte-exact, no error rows."""
+    from juniper_syslog_filter_spark.driver_queries.sources import (
+        q_wc1_warc_source,
+        q_wc2_warc_indexed,
+    )
 
-    out = {r.url: r for r in q_wc1_warc_source(spark, sf_dir).collect()}
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text", "lang")
         .collect()
     )
-    assert len(out) == len(docs)
-    for d in docs:
-        r = out[f"https://example.org/doc/{d.doc_id}"]
-        assert r.text == d.text
-        assert r.content_lang == d.lang
-        assert r.warc_ts.minute * 60 + r.warc_ts.second == d.doc_id % 3600
+    for q in (q_wc1_warc_source, q_wc2_warc_indexed):
+        rows = q(spark, sf_dir).collect()
+        assert not [r for r in rows if r._error]
+        out = {r.url: r for r in rows}
+        assert len(out) == len(rows) == len(docs)
+        for d in docs:
+            r = out[f"https://example.org/doc/{d.doc_id}"]
+            assert r.text == d.text
+            assert r.content_lang == d.lang
+            assert r.warc_ts.minute * 60 + r.warc_ts.second == d.doc_id % 3600
 
 
 # ---------------------------------------------------------------------------
