@@ -26,8 +26,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.utils import AnalysisException
 
 LOG_SCHEMA = (
-    "batch_id string, unit string, bytes_in long, rows_parsed long, "
-    "rows_routed long, stage string, committed_at timestamp"
+    "batch_id string, unit string, bytes_in long, rows_routed long, "
+    "stage string, committed_at timestamp"
 )
 
 
@@ -63,7 +63,6 @@ class CheckpointTable:
             "batch_id": [r["batch_id"] for r in rows],
             "unit": [r["unit"] for r in rows],
             "bytes_in": [int(r.get("bytes_in", 0)) for r in rows],
-            "rows_parsed": [int(r.get("rows_parsed", 0)) for r in rows],
             "rows_routed": [int(r.get("rows_routed", 0)) for r in rows],
             "stage": [r.get("stage", "pipeline") for r in rows],
             "committed_at": [now] * len(rows),

@@ -1,6 +1,14 @@
 """The reference syslog pipeline over ``events``: keyword/severity filters,
 projection, F1-F7 extract/classify, routing and the severity enrich
-join."""
+join.
+
+The Spark side reads F1-F5 from ``parse.message_fields``, the pipeline's
+Python ``re`` kernel. The DuckDB oracles apply the same ``*_PATTERN``
+constants with ``regexp_extract``, but DuckDB's RE2 reads ``\\d \\w \\s``
+as ASCII-only, so oracle and kernel agree only on ASCII messages; the
+synthesized Message (``common._MSG_SQL`` / ``_msg_col``) is ASCII-only,
+so every message these queries check is one they agree on.
+"""
 
 from __future__ import annotations
 
@@ -8,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..datagen import load_table
 from ..functions import parse as P
-from ..functions.ip import classify_ip_expr
+from ..functions.ip import classify_ips
 from .common import _events_with_msg, _M_BASE, _SEV_CASES, query
 
 
@@ -41,9 +49,9 @@ def q_p2_filter_severity(spark, sf_dir):
 
 @query(oracle=f"""
         WITH m AS ({_M_BASE})
-        SELECT event_id, regexp_extract(Message, 'Severity=(\\w+)', 1) AS Severity
+        SELECT event_id, regexp_extract(Message, '{P.SEVERITY_PATTERN}', 1) AS Severity
         FROM m
-        WHERE regexp_extract(Message, 'Severity=(\\w+)', 1) = 'CRITICAL'
+        WHERE regexp_extract(Message, '{P.SEVERITY_PATTERN}', 1) = 'CRITICAL'
     """)
 def q_p3_filter_merge(spark, sf_dir):
     """P3 filter_and_merge (modules/filter_critical_and_merge.py:30-127):
@@ -52,7 +60,7 @@ def q_p3_filter_merge(spark, sf_dir):
     from ..operators.filters import filter_and_merge_severity
 
     df = _events_with_msg(spark, sf_dir).select(
-        "event_id", P.extract_severity_expr(F.col("Message")).alias("Severity")
+        "event_id", P.message_fields(F.col("Message"))["Severity"].alias("Severity")
     )
     return filter_and_merge_severity(df, "CRITICAL")
 
@@ -78,9 +86,6 @@ def q_f3_extract_regex(spark, sf_dir):
     )
 
 
-_ROUTING_RE = r"(\d+\.\d+\.\d+\.\d+)/\d+\s*>\s*(\d+\.\d+\.\d+\.\d+)/\d+"
-
-
 _CLASSIFY_SQL = """
     CASE WHEN {ip} = '' THEN ''
          WHEN TRY_CAST(string_split({ip}, '.')[1] AS INT) = 10
@@ -96,11 +101,11 @@ _CLASSIFY_SQL = """
         WITH m AS ({_M_BASE}),
         r AS (
           SELECT event_id,
-                 regexp_extract(Message, '{_ROUTING_RE}', 1) AS srcIP,
-                 regexp_extract(Message, '{_ROUTING_RE}', 2) AS dstIP,
-                 regexp_extract(Message, 'protocol=(\\w+)', 1) AS protocol,
-                 regexp_extract(Message, 'SeverityLevel=(\\d+)', 1) AS SeverityLevel,
-                 regexp_extract(Message, 'Severity=(\\w+)', 1) AS Severity
+                 regexp_extract(Message, '{P.ROUTING_PATTERN}', 1) AS srcIP,
+                 regexp_extract(Message, '{P.ROUTING_PATTERN}', 2) AS dstIP,
+                 regexp_extract(Message, '{P.PROTOCOL_PATTERN}', 1) AS protocol,
+                 regexp_extract(Message, '{P.SEVERITY_LEVEL_PATTERN}', 1) AS SeverityLevel,
+                 regexp_extract(Message, '{P.SEVERITY_PATTERN}', 1) AS Severity
           FROM m
         )
         SELECT event_id,
@@ -117,34 +122,17 @@ def q_m1_parse_classify(spark, sf_dir):
     routing extract, IP split, private/global classify, protocol +
     severity extracts — '' conventions throughout."""
     df = _events_with_msg(spark, sf_dir)
-    msg = F.col("Message")
-    routing = P.extract_routing_expr(msg)
-    src, dst = P.split_ip_exprs(routing)
-    out = df.select(
-        "event_id",
-        routing.alias("routing"),
-        src.alias("srcIP"),
-        dst.alias("dstIP"),
-        P.extract_protocol_expr(msg).alias("protocol"),
-        P.extract_severity_level_expr(msg).alias("SeverityLevel"),
-        P.extract_severity_expr(msg).alias("Severity"),
-    )
-    return out.select(
-        "event_id", "routing", "srcIP",
-        classify_ip_expr(F.col("srcIP")).alias("srcIP_type"),
-        "dstIP",
-        classify_ip_expr(F.col("dstIP")).alias("dstIP_type"),
-        "protocol", "SeverityLevel", "Severity",
-    )
+    fields = df.select("event_id", P.message_fields(F.col("Message")).alias("f"))
+    return classify_ips(fields.select("event_id", "f.*"))
 
 
 @query(oracle=f"""
         WITH m AS ({_M_BASE}),
         r AS (
           SELECT event_id,
-                 regexp_extract(Message, '{_ROUTING_RE}', 1) AS srcIP,
-                 regexp_extract(Message, '{_ROUTING_RE}', 2) AS dstIP,
-                 regexp_extract(Message, 'Severity=(\\w+)', 1) AS Severity
+                 regexp_extract(Message, '{P.ROUTING_PATTERN}', 1) AS srcIP,
+                 regexp_extract(Message, '{P.ROUTING_PATTERN}', 2) AS dstIP,
+                 regexp_extract(Message, '{P.SEVERITY_PATTERN}', 1) AS Severity
           FROM m WHERE contains(Message, 'observed')
         )
         SELECT event_id,
@@ -158,27 +146,16 @@ def q_m2_critical_routed(spark, sf_dir):
     """Phases 1-10 composed: keyword filter → parse → classify →
     severity filter (the reference's canonical CLI path, run.py:42-433)."""
     df = _events_with_msg(spark, sf_dir).filter(F.col("Message").contains("observed"))
-    msg = F.col("Message")
-    routing = P.extract_routing_expr(msg)
-    src, dst = P.split_ip_exprs(routing)
-    out = df.select(
-        "event_id",
-        routing.alias("routing"),
-        src.alias("srcIP"),
-        dst.alias("dstIP"),
-        P.extract_severity_expr(msg).alias("Severity"),
-    ).filter(F.col("Severity") == "CRITICAL")
-    return out.select(
-        "event_id", "routing",
-        classify_ip_expr(F.col("srcIP")).alias("srcIP_type"),
-        classify_ip_expr(F.col("dstIP")).alias("dstIP_type"),
-        "Severity",
+    fields = df.select("event_id", P.message_fields(F.col("Message")).alias("f"))
+    out = fields.select("event_id", "f.*").filter(F.col("Severity") == "CRITICAL")
+    return classify_ips(out).select(
+        "event_id", "routing", "srcIP_type", "dstIP_type", "Severity"
     )
 
 
 @query(oracle=f"""
         WITH m AS ({_M_BASE})
-        SELECT regexp_extract(Message, 'Severity=(\\w+)', 1) AS severity,
+        SELECT regexp_extract(Message, '{P.SEVERITY_PATTERN}', 1) AS severity,
                CAST(ts AS DATE) AS date,
                count(*) AS n
         FROM m GROUP BY 1, 2
@@ -189,7 +166,7 @@ def q_m3_route_aggregate(spark, sf_dir):
     df = _events_with_msg(spark, sf_dir)
     return (
         df.select(
-            P.extract_severity_expr(F.col("Message")).alias("severity"),
+            P.message_fields(F.col("Message"))["Severity"].alias("severity"),
             F.to_date("ts").alias("date"),
         )
         .groupBy("severity", "date")

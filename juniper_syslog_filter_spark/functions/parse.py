@@ -7,8 +7,8 @@ SURVEY.md §4.2).
 
 Byte-identity invariant (BASELINE.json input_hint): extraction uses
 pandas ``.str.extract`` / ``.str.contains`` — the exact same Python
-``re`` engine the reference uses — with the reference's verbatim
-patterns:
+``re`` engine on ``str`` the reference uses, so ``\\d \\w \\s`` are
+Unicode-aware — with the reference's verbatim patterns:
 
 * routing   ``(\\d+\\.\\d+\\.\\d+\\.\\d+)/\\d+\\s*>\\s*(\\d+\\.\\d+\\.\\d+\\.\\d+)/\\d+``
   (modules/extract_routing.py:27)
@@ -19,6 +19,13 @@ patterns:
 
 Missing values are the empty string, never null (modules/split_ip.py:70
 et al.). Column order follows the reference stage contracts (FIXTURES §3).
+
+F1-F5 have ONE implementation, :func:`message_fields_pandas`. The
+pipeline calls it inside :func:`parse_records_pandas`; the driver
+queries and the standalone stages call it through the
+:func:`message_fields` ``pandas_udf``. There is no JVM ``regexp_extract``
+form: Java regex and RE2 treat ``\\d \\w \\s`` as ASCII-only, so they
+disagree with Python ``re`` on non-ASCII messages.
 
 Scale notes: the keyword filter is pushed *before* the regex UDF as a
 cheap binary ``contains`` on raw html bytes (sound: Message is a
@@ -47,14 +54,57 @@ PROTOCOL_PATTERN = r"protocol=(\w+)"
 SEVERITY_LEVEL_PATTERN = r"SeverityLevel=(\d+)"
 SEVERITY_PATTERN = r"Severity=(\w+)"
 
+# The F1-F5 fields of one Message, in contract order.
+MESSAGE_FIELDS_SCHEMA = (
+    "routing string, srcIP string, dstIP string, protocol string, "
+    "SeverityLevel string, Severity string"
+)
 # Output contract: page keys + the reference's final 12 columns minus the
 # enrich-stage IP-type columns (added by enrich.classify_ips).
 PARSED_SCHEMA = (
     "url string, warc_ts timestamp, lang string, "
-    "Timestamp string, Hostname string, AppName string, routing string, "
-    "srcIP string, dstIP string, protocol string, "
-    "SeverityLevel string, Severity string, Message string"
+    f"Timestamp string, Hostname string, AppName string, {MESSAGE_FIELDS_SCHEMA}, "
+    "Message string"
 )
+
+
+def message_fields_pandas(msg: pd.Series) -> pd.DataFrame:
+    """F1-F5 over a batch of Messages: the one place their regexes run.
+
+    Columns follow :data:`MESSAGE_FIELDS_SCHEMA`; a field that does not
+    match (or a null Message) is ``""``.
+    """
+    # F1 extract_routing (modules/extract_routing.py:77-87): two groups →
+    # "src > dst"; no-match → "" via the " > " sentinel rewrite.
+    route = msg.str.extract(ROUTING_PATTERN)
+    # F2 split_ip (modules/split_ip.py:78-87).
+    src_ip = route[0].fillna("")
+    dst_ip = route[1].fillna("")
+    return pd.DataFrame(
+        {
+            "routing": (src_ip + " > " + dst_ip).replace(" > ", ""),
+            "srcIP": src_ip,
+            "dstIP": dst_ip,
+            # F3-F5: one extract each (the reference runs 3 passes).
+            "protocol": msg.str.extract(PROTOCOL_PATTERN)[0].fillna(""),
+            "SeverityLevel": msg.str.extract(SEVERITY_LEVEL_PATTERN)[0].fillna(""),
+            "Severity": msg.str.extract(SEVERITY_PATTERN)[0].fillna(""),
+        }
+    )
+
+
+def message_fields(msg: Column) -> Column:
+    """F1-F5 of a Message column as one struct (:data:`MESSAGE_FIELDS_SCHEMA`),
+    computed by :func:`message_fields_pandas` in an Arrow-batched
+    ``pandas_udf``. Select the struct once and read its fields from that
+    column, so the kernel runs once per row, not once per field.
+
+    The kernel is deterministic; the UDF is marked non-deterministic only
+    so that Catalyst does not copy it into a filter it pushes below the
+    projection (e.g. ``Severity == 'CRITICAL'``), which would run the
+    kernel a second time per row."""
+    udf = F.pandas_udf(message_fields_pandas, MESSAGE_FIELDS_SCHEMA)
+    return udf.asNondeterministic()(msg)
 
 
 def parse_records_pandas(pdf: pd.DataFrame, keyword: str | None = None) -> pd.DataFrame:
@@ -80,29 +130,12 @@ def parse_records_pandas(pdf: pd.DataFrame, keyword: str | None = None) -> pd.Da
     )[mask.values]
     rec = rec[mask.values].fillna("")
 
-    msg = rec["Message"]
-    # F1 extract_routing (modules/extract_routing.py:77-87): two groups →
-    # "src > dst"; no-match → "" via the " > " sentinel rewrite.
-    route = msg.str.extract(ROUTING_PATTERN)
-    routing = (route[0].fillna("") + " > " + route[1].fillna("")).replace(" > ", "")
-    # F2 split_ip (modules/split_ip.py:78-87).
-    src_ip = route[0].fillna("")
-    dst_ip = route[1].fillna("")
-    # F3-F5 single pass over Message (fused; reference runs 3 passes).
-    protocol = msg.str.extract(PROTOCOL_PATTERN)[0].fillna("")
-    sev_level = msg.str.extract(SEVERITY_LEVEL_PATTERN)[0].fillna("")
-    severity = msg.str.extract(SEVERITY_PATTERN)[0].fillna("")
-
     out["Timestamp"] = rec["Timestamp"]
     out["Hostname"] = rec["Hostname"]
     out["AppName"] = rec["AppName"]
-    out["routing"] = routing
-    out["srcIP"] = src_ip
-    out["dstIP"] = dst_ip
-    out["protocol"] = protocol
-    out["SeverityLevel"] = sev_level
-    out["Severity"] = severity
-    out["Message"] = msg
+    fields = message_fields_pandas(rec["Message"])
+    out[fields.columns] = fields
+    out["Message"] = rec["Message"]
     if "src_file" in pdf.columns:
         # Lineage column last — mapInPandas matches the schema by position.
         out["src_file"] = pdf["src_file"][mask.values]
@@ -161,39 +194,9 @@ def parse_pages(
     return src.mapInPandas(run, schema=schema)
 
 
-# ---------------------------------------------------------------------------
-# Catalyst-expression variants (JVM-side, whole-stage-codegen) of F1-F5.
-# Used where Java-regex/RE2 semantics coincide with Python `re` (these
-# patterns use only \d \s \w on ASCII — identical across engines), e.g. the
-# driver-contract queries over the provided tables. regexp_extract returns
-# "" on no-match, matching the reference's fillna("") convention exactly.
-# ---------------------------------------------------------------------------
-
-def extract_routing_expr(msg: Column) -> Column:
-    """F1 (modules/extract_routing.py:24-95) as pure expressions."""
-    src = F.regexp_extract(msg, ROUTING_PATTERN, 1)
-    dst = F.regexp_extract(msg, ROUTING_PATTERN, 2)
-    return F.when((src != "") & (dst != ""), F.concat_ws(" > ", src, dst)).otherwise(F.lit(""))
-
-
 def split_ip_exprs(routing: Column) -> tuple[Column, Column]:
     """F2 (modules/split_ip.py:27-101): routing → (srcIP, dstIP)."""
     parts = F.split(routing, " > ", 2)
     src = F.when(routing == "", F.lit("")).otherwise(F.coalesce(parts.getItem(0), F.lit("")))
     dst = F.when(routing == "", F.lit("")).otherwise(F.coalesce(parts.getItem(1), F.lit("")))
     return src, dst
-
-
-def extract_protocol_expr(msg: Column) -> Column:
-    """F3 (modules/extract_protocol.py:28-84)."""
-    return F.regexp_extract(msg, PROTOCOL_PATTERN, 1)
-
-
-def extract_severity_level_expr(msg: Column) -> Column:
-    """F4 (modules/extract_severity_level.py:28-84); digit *string*."""
-    return F.regexp_extract(msg, SEVERITY_LEVEL_PATTERN, 1)
-
-
-def extract_severity_expr(msg: Column) -> Column:
-    """F5 (modules/extract_severity.py:28-84)."""
-    return F.regexp_extract(msg, SEVERITY_PATTERN, 1)

@@ -68,7 +68,6 @@ def aggregate_counts(df: DataFrame) -> DataFrame:
 class PipelineResult:
     batch_id: str | None
     units_processed: int
-    rows_parsed: int
     rows_routed: int
     routed_path: str
     agg_path: str
@@ -128,7 +127,7 @@ def run_pipeline(
     else:
         pending = all_files
     if not pending:
-        return PipelineResult(None, 0, 0, 0, routed_path, agg_path)
+        return PipelineResult(None, 0, 0, routed_path, agg_path)
 
     unit_paths = [f for f, _ in pending]
     batch = batch_id_for(unit_paths)
@@ -179,7 +178,6 @@ def run_pipeline(
             "batch_id": batch,
             "unit": f,
             "bytes_in": size,
-            "rows_parsed": per_file.get(f, 0),
             "rows_routed": per_file.get(f, 0),
             "stage": "pipeline",
         }
@@ -190,5 +188,5 @@ def run_pipeline(
     mark("checkpoint-commit")
 
     return PipelineResult(
-        batch, len(pending), rows_routed, rows_routed, routed_path, agg_path, lineage
+        batch, len(pending), rows_routed, routed_path, agg_path, lineage
     )

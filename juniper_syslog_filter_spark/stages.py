@@ -5,9 +5,10 @@ stage directory, e.g. modules/extract_routing.py:131-167).
 Each stage is ONE named transform over a CSV stage directory — read
 with the ''-for-missing convention, apply, write the next stage dir —
 driven by ``python -m juniper_syslog_filter_spark stage <name> ...``.
-Inside the real pipeline these same expressions fuse into one Catalyst
-plan (pipeline.py); the standalone form exists for API parity and ad-hoc
-debugging, exactly like the reference's per-module mains.
+The extract stages read one field each from the F1-F5 kernel the
+pipeline runs (``parse.message_fields``); split-ip and classify-ip are
+Catalyst expressions. The standalone form exists for API parity and
+ad-hoc debugging, exactly like the reference's per-module mains.
 
 Column-order contract (SURVEY §1.3): every deriving stage re-inserts its
 new column(s) at the reference's documented position (routing before
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import parse as P
-from .functions.ip import classify_ip_expr
+from .functions.ip import classify_ips
 from .operators.filters import filter_keyword, filter_severity
 from .operators.project import reduce_columns
 
@@ -49,6 +50,11 @@ def _with_before_message(df: DataFrame, named_cols: dict[str, F.Column]) -> Data
     return df.select(*order)
 
 
+def _message_field(df: DataFrame, name: str) -> DataFrame:
+    """One F1/F3-F5 field of :func:`parse.message_fields`, before Message."""
+    return _with_before_message(df, {name: P.message_fields(F.col("Message"))[name]})
+
+
 def stage_filter_keyword(df: DataFrame, keyword: str = "RT_IDP_ATTACK") -> DataFrame:
     """P1 (modules/filter_keyword.py:21-94)."""
     return filter_keyword(df, keyword)
@@ -66,9 +72,7 @@ def stage_reduce_columns(df: DataFrame, keep: str = "0,1,2,6") -> DataFrame:
 
 def stage_extract_routing(df: DataFrame) -> DataFrame:
     """F1 (modules/extract_routing.py:24-128): routing before Message."""
-    return _with_before_message(
-        df, {"routing": P.extract_routing_expr(F.col("Message"))}
-    )
+    return _message_field(df, "routing")
 
 
 def stage_split_ip(df: DataFrame) -> DataFrame:
@@ -83,39 +87,22 @@ def stage_split_ip(df: DataFrame) -> DataFrame:
 def stage_classify_ip(df: DataFrame) -> DataFrame:
     """F6/F7 (modules/classify_ip.py:104-206): srcIP_type after srcIP,
     dstIP_type after dstIP."""
-    df = df.withColumn("srcIP_type", classify_ip_expr(F.col("srcIP"))).withColumn(
-        "dstIP_type", classify_ip_expr(F.col("dstIP"))
-    )
-    cols = [c for c in df.columns if c not in ("srcIP_type", "dstIP_type")]
-    out: list[str] = []
-    for c in cols:
-        out.append(c)
-        if c == "srcIP":
-            out.append("srcIP_type")
-        elif c == "dstIP":
-            out.append("dstIP_type")
-    return df.select(*out)
+    return classify_ips(df)
 
 
 def stage_extract_protocol(df: DataFrame) -> DataFrame:
     """F3 (modules/extract_protocol.py:28-126)."""
-    return _with_before_message(
-        df, {"protocol": P.extract_protocol_expr(F.col("Message"))}
-    )
+    return _message_field(df, "protocol")
 
 
 def stage_extract_severity_level(df: DataFrame) -> DataFrame:
     """F4 (modules/extract_severity_level.py:28-126; kept as string)."""
-    return _with_before_message(
-        df, {"SeverityLevel": P.extract_severity_level_expr(F.col("Message"))}
-    )
+    return _message_field(df, "SeverityLevel")
 
 
 def stage_extract_severity(df: DataFrame) -> DataFrame:
     """F5 (modules/extract_severity.py:28-126)."""
-    return _with_before_message(
-        df, {"Severity": P.extract_severity_expr(F.col("Message"))}
-    )
+    return _message_field(df, "Severity")
 
 
 def stage_merge(df: DataFrame) -> DataFrame:

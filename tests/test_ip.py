@@ -1,16 +1,13 @@
 """IP classifier tests — the reference's boundary table verbatim
-(tests/test_classify_ip.py:38-67) against BOTH the Catalyst expression and
-the driver-local twin."""
+(tests/test_classify_ip.py:38-67) against BOTH the Catalyst expressions
+(``classify_ips``) and the driver-local twin."""
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from juniper_syslog_filter_spark.functions.ip import (
     classify_ip_address,
-    classify_ip_expr,
     classify_ips,
     is_private_ip,
 )
@@ -37,6 +34,11 @@ CASES = [
     ("-1.2.3.4", "global"),
     ("a.b.c.d", "global"),
     ("010.0.0.1", "private"),  # int("010") == 10 in both engines
+    # int() reads any Unicode decimal digit; the parse kernel's \d+ emits them
+    ("١٠.1.2.3", "private"),
+    ("１０.0.0.1", "private"),
+    ("𝟏𝟗𝟐.𝟏𝟔𝟖.0.1", "private"),
+    ("10.0.0.２５６", "global"),
 ]
 
 
@@ -45,21 +47,20 @@ def test_local_twin(ip, expected):
     assert classify_ip_address(ip) == expected
 
 
+def _classified(spark, ips):
+    """classify_ips over rows with srcIP == dstIP == ip: {ip: (src, dst type)}."""
+    df = spark.createDataFrame([(ip, ip) for ip in ips], "srcIP string, dstIP string")
+    return {r.srcIP: (r.srcIP_type, r.dstIP_type) for r in classify_ips(df).collect()}
+
+
 def test_expression_matches_reference_table(spark):
-    pdf = pd.DataFrame({"ip": [c[0] for c in CASES]})
-    out = (
-        spark.createDataFrame(pdf)
-        .select("ip", classify_ip_expr(F.col("ip")).alias("t"))
-        .collect()
-    )
-    got = {r.ip: r.t for r in out}
+    got = _classified(spark, [c[0] for c in CASES])
     for ip, expected in CASES:
-        assert got[ip] == expected, ip
+        assert got[ip] == (expected, expected), ip
 
 
 def test_null_ip_maps_to_empty(spark):
-    df = spark.createDataFrame([(None,)], "ip string")
-    assert df.select(classify_ip_expr(F.col("ip")).alias("t")).collect()[0].t == ""
+    assert _classified(spark, [None]) == {None: ("", "")}
 
 
 def test_classify_ips_column_order(spark):

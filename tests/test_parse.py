@@ -115,33 +115,48 @@ def test_byte_identity_distributed_vs_local_re(spark):
     assert n_checked > 300
 
 
-def test_expression_variants_match_python_re(spark):
-    """F1-F5 Catalyst expressions agree with Python re on the grammar."""
+def re_fields(msg: str) -> dict[str, str]:
+    """Per-row ``re.search`` oracle of ``message_fields`` for one Message."""
+
+    def group1(pattern):
+        m = re.search(pattern, msg)
+        return m.group(1) if m else ""
+
+    rt = re.search(P.ROUTING_PATTERN, msg)
+    return {
+        "routing": f"{rt.group(1)} > {rt.group(2)}" if rt else "",
+        "srcIP": rt.group(1) if rt else "",
+        "dstIP": rt.group(2) if rt else "",
+        "protocol": group1(P.PROTOCOL_PATTERN),
+        "SeverityLevel": group1(P.SEVERITY_LEVEL_PATTERN),
+        "Severity": group1(P.SEVERITY_PATTERN),
+    }
+
+
+def message_fields_rows(spark, msgs: list[str]) -> list:
+    """Run ``message_fields`` over ``msgs``: rows of Message + the 6 fields."""
     from pyspark.sql import functions as F
 
+    df = spark.createDataFrame([(m,) for m in msgs], "Message string")
+    return (
+        df.select("Message", P.message_fields(F.col("Message")).alias("f"))
+        .select("Message", "f.*")
+        .collect()
+    )
+
+
+def test_message_fields_match_python_re(spark):
+    """F1-F5 through the message_fields pandas_udf agree with per-row
+    Python re on the generated grammar, and every field matches."""
     _, pdf = _pages_df(spark, n=200, record_ratio=1.0)
-    msgs = []
     block = re.compile(P.LOG_BLOCK_PATTERN)
-    for h in pdf["html"]:
-        msgs.append(block.search(h.decode()).group(4))
-    mdf = spark.createDataFrame(pd.DataFrame({"Message": msgs}))
-    src, dst = P.split_ip_exprs(P.extract_routing_expr(F.col("Message")))
-    out = mdf.select(
-        P.extract_routing_expr(F.col("Message")).alias("routing"),
-        src.alias("srcIP"),
-        dst.alias("dstIP"),
-        P.extract_protocol_expr(F.col("Message")).alias("protocol"),
-        P.extract_severity_level_expr(F.col("Message")).alias("lvl"),
-        P.extract_severity_expr(F.col("Message")).alias("sev"),
-        "Message",
-    ).collect()
-    for r in out:
-        rt = re.search(P.ROUTING_PATTERN, r.Message)
-        assert r.routing == (f"{rt.group(1)} > {rt.group(2)}" if rt else "")
-        assert r.srcIP == (rt.group(1) if rt else "")
-        assert r.protocol == re.search(P.PROTOCOL_PATTERN, r.Message).group(1)
-        assert r.lvl == re.search(P.SEVERITY_LEVEL_PATTERN, r.Message).group(1)
-        assert r.sev == re.search(P.SEVERITY_PATTERN, r.Message).group(1)
+    msgs = [block.search(h.decode()).group(4) for h in pdf["html"]]
+    rows = message_fields_rows(spark, msgs)
+    assert len(rows) == len(msgs)
+    for r in rows:
+        want = re_fields(r.Message)
+        assert {k: v for k, v in r.asDict().items() if k != "Message"} == want
+        assert all(want.values()), r.Message
 
 
 def test_narrowing_is_byte_exact_on_adversarial_prefixes(spark):

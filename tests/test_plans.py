@@ -54,6 +54,17 @@ def test_parquet_scan_pushdown_and_pruning(spark):
     assert "o_totalprice" in pf, "predicate pushdown failed"
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["p3_filter_merge", "m1_parse_classify", "m2_critical_routed", "m3_route_aggregate"],
+)
+def test_message_fields_kernel_runs_once_per_row(spark, name):
+    """The F1-F5 kernel is one pandas_udf evaluated once per row: one
+    ArrowEvalPython node, not one per field read and none copied into a
+    pushed-down severity filter."""
+    assert _plan(QUERIES[name](spark, SF)).count("ArrowEvalPython") == 1
+
+
 def test_enrich_join_is_broadcast_not_sortmerge(spark):
     plan = _plan(QUERIES["j1_broadcast_enrich"](spark, SF))
     assert "BroadcastHashJoin" in plan

@@ -1,11 +1,14 @@
-"""Property-based (hypothesis) twin-equivalence tests.
+"""Property-based (hypothesis) equivalence tests.
 
-The engine keeps three definitions of every hot function — pandas_udf
-kernel (execution), Catalyst expression (portable spec), Python re/str
-(driver-local oracle) — and the fixed-corpus tests assert they agree on
-curated examples. These properties assert the same on RANDOM inputs:
-hypothesis drives adversarial strings (weird whitespace runs, stopword
-fragments, malformed IPs, boundary octets) through all twins at once.
+Each hot function here is checked against a driver-local Python oracle.
+Some have one implementation (the F1-F5 parse kernel, checked against
+per-row ``re.search``); others keep a second form (a Catalyst expression
+next to a pandas_udf kernel, or an expression next to a Python twin),
+and the fixed-corpus tests assert the forms agree on curated examples.
+These properties assert the same on RANDOM inputs: hypothesis drives
+adversarial strings (weird and non-ASCII whitespace, Unicode digits and
+letters, stopword fragments, malformed IPs, boundary octets) through
+every form at once.
 
 Each example batches its generated rows into ONE small Spark job;
 max_examples is kept low because a Spark round-trip costs ~0.2 s.
@@ -13,17 +16,14 @@ max_examples is kept low because a Spark round-trip costs ~0.2 s.
 
 from __future__ import annotations
 
-import re
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from juniper_syslog_filter_spark.functions import parse as P
 from juniper_syslog_filter_spark.functions import text as T
 from juniper_syslog_filter_spark.functions.ip import (
     classify_ip_address,
-    classify_ip_expr,
+    classify_ips,
 )
 from juniper_syslog_filter_spark.functions.text import STOPWORDS
 from juniper_syslog_filter_spark.operators.dedup import simhash, simhash_expr
@@ -64,73 +64,76 @@ def test_text_kernels_match_expressions(spark, texts):
         assert r.k_sim == r.e_sim
 
 
+# Decimal digits in several scripts: Python's int() and re's \d read them
+# all, the JVM's cast and regex only ASCII.
+_DIGIT_SCRIPTS = ["0123456789", "٠١٢٣٤٥٦٧٨٩", "０１２３４５６７８９", "𝟎𝟏𝟐𝟑𝟒𝟓𝟔𝟕𝟖𝟗"]
+_ND = "".join(_DIGIT_SCRIPTS)
+
+
+def _in_script(s: str, script: str) -> str:
+    return s.translate(str.maketrans("0123456789", script))
+
+
 # IPv4-shaped and garbage inputs: valid octets, boundary values around
-# the RFC-1918 edges, too-large octets, wrong arity, junk separators.
+# the RFC-1918 edges, too-large octets, wrong arity, junk separators,
+# non-ASCII digits.
 _octet = st.one_of(
     st.integers(min_value=0, max_value=255),
     st.sampled_from([9, 10, 11, 171, 172, 173, 15, 16, 31, 32, 167, 168, 169]),
     st.integers(min_value=256, max_value=999),
 )
+_ip = st.tuples(_octet, _octet, _octet, _octet, st.sampled_from(_DIGIT_SCRIPTS)).map(
+    lambda t: _in_script(".".join(map(str, t[:4])), t[4])
+)
 _ipish = st.one_of(
     st.tuples(_octet, _octet, _octet, _octet).map(
         lambda t: ".".join(map(str, t))
     ),
+    _ip,
     st.tuples(_octet, _octet, _octet).map(lambda t: ".".join(map(str, t))),
     st.sampled_from(["", " ", "...", "a.b.c.d", "10.0.0.1.2", "10..0.1"]),
-    st.text(alphabet="0123456789. ", min_size=0, max_size=16),
+    st.text(alphabet=_ND + ". ", min_size=0, max_size=16),
 )
 
 
 @given(ips=st.lists(_ipish, min_size=1, max_size=12))
 @settings(**SETTINGS)
 def test_ip_classifier_expr_matches_python(spark, ips):
-    df = spark.createDataFrame([(ip,) for ip in ips], "ip string")
-    rows = df.select("ip", classify_ip_expr(F.col("ip")).alias("cls")).collect()
-    for r in rows:
-        assert r.cls == classify_ip_address(r.ip), repr(r.ip)
+    df = spark.createDataFrame([(ip, ip) for ip in ips], "srcIP string, dstIP string")
+    for r in classify_ips(df).collect():
+        want = classify_ip_address(r.srcIP)
+        assert (r.srcIP_type, r.dstIP_type) == (want, want), repr(r.srcIP)
 
 
 # Syslog-ish messages: grammar fragments permuted with noise so the
-# extraction regexes see matches, near-misses, and absent fields.
+# extraction regexes see matches, near-misses, and absent fields, over an
+# alphabet with Unicode digits, accented letters, a combining mark (\w
+# does not match it) and NBSP / EM SPACE (\s matches them).
+_WS = [" ", "  ", "\u00a0", "\u2003", ""]
+_LETTERS = "abcTCPUDéÉñß" + "\u0301"
 _frag = st.one_of(
-    st.tuples(_octet, _octet, _octet, _octet, _octet, _octet, _octet, _octet).map(
-        lambda t: f"{t[0]}.{t[1]}.{t[2]}.{t[3]} > {t[4]}.{t[5]}.{t[6]}.{t[7]}"
+    st.tuples(_ip, _octet, st.sampled_from(_WS), st.sampled_from(_WS), _ip, _octet).map(
+        lambda t: f"{t[0]}/{t[1]}{t[2]}>{t[3]}{t[4]}/{t[5]}"
     ),
-    st.sampled_from(["TCP", "UDP", "ICMP", "protocol TCP", "protocol-id: 6"]),
-    st.sampled_from(
-        ["severity 5", "severity CRITICAL", "CRITICAL", "WARNING", "INFO"]
-    ),
-    st.text(alphabet="abcdef0123456789 .>:-", min_size=0, max_size=12),
+    st.text(alphabet=_LETTERS + _ND, min_size=0, max_size=6).map(lambda w: f"protocol={w}"),
+    st.text(alphabet=_ND + "x", min_size=0, max_size=3).map(lambda w: f"SeverityLevel={w}"),
+    st.text(alphabet=_LETTERS + "CRITÉ", min_size=0, max_size=8).map(lambda w: f"Severity={w}"),
+    st.sampled_from(["TCP", "protocol TCP", "protocol-id: 6", "severity 5", "CRITICAL"]),
+    st.text(alphabet="abcdef0123456789 .>:-/=" + _LETTERS + _ND + "".join(_WS), min_size=0, max_size=12),
 )
 _msg = st.lists(_frag, min_size=0, max_size=6).map(" ".join)
 
 
 @given(msgs=st.lists(_msg, min_size=1, max_size=10))
 @settings(**SETTINGS)
-def test_parse_exprs_match_python_re(spark, msgs):
-    df = spark.createDataFrame([(m,) for m in msgs], "Message string")
-    src, dst = P.split_ip_exprs(P.extract_routing_expr(F.col("Message")))
-    rows = df.select(
-        "Message",
-        P.extract_routing_expr(F.col("Message")).alias("routing"),
-        src.alias("srcIP"),
-        dst.alias("dstIP"),
-        P.extract_protocol_expr(F.col("Message")).alias("protocol"),
-        P.extract_severity_level_expr(F.col("Message")).alias("lvl"),
-        P.extract_severity_expr(F.col("Message")).alias("sev"),
-    ).collect()
+def test_message_fields_match_python_re(spark, msgs):
+    from tests.test_parse import message_fields_rows, re_fields
+
+    rows = message_fields_rows(spark, msgs)
+    assert [r.Message for r in rows] == msgs
     for r in rows:
-        m = re.search(P.ROUTING_PATTERN, r.Message)
-        routing = f"{m.group(1)} > {m.group(2)}" if m else ""
-        assert r.routing == routing, repr(r.Message)
-        assert r.srcIP == (m.group(1) if m else "")
-        assert r.dstIP == (m.group(2) if m else "")
-        pm = re.search(P.PROTOCOL_PATTERN, r.Message)
-        assert r.protocol == (pm.group(1) if pm else "")
-        lm = re.search(P.SEVERITY_LEVEL_PATTERN, r.Message)
-        assert r.lvl == (lm.group(1) if lm else "")
-        sm = re.search(P.SEVERITY_PATTERN, r.Message)
-        assert r.sev == (sm.group(1) if sm else "")
+        got = {k: v for k, v in r.asDict().items() if k != "Message"}
+        assert got == re_fields(r.Message), repr(r.Message)
 
 
 # ---------------------------------------------------------------------------

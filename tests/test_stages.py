@@ -63,6 +63,41 @@ def test_stage_chain_column_order_and_values(spark):
     assert kw.count() == 1
 
 
+# Non-ASCII inputs on which Java regex (ASCII-only \d \w \s) and the
+# reference's Python re disagree: (Message, field, value the reference
+# extracts). The JVM gave '', 'T', 'CRIT' and '' respectively.
+UNICODE_CASES = [
+    ("observed SeverityLevel=٢ Severity=INFO", "SeverityLevel", "٢"),
+    ("observed protocol=TéCP SeverityLevel=4", "protocol", "TéCP"),
+    ("observed Severity=CRITÉ", "Severity", "CRITÉ"),
+    (
+        "observed 10.1.2.3/1024\u00a0>\u00a0203.0.113.9/443 protocol=tcp",
+        "routing",
+        "10.1.2.3 > 203.0.113.9",
+    ),
+]
+
+
+def test_extract_stages_follow_python_re_on_unicode(spark):
+    from tests.test_parse import re_fields
+
+    df = spark.createDataFrame(
+        [(str(i), m) for i, (m, _, _) in enumerate(UNICODE_CASES)],
+        "Hostname string, Message string",
+    )
+    df = S.stage_extract_severity(
+        S.stage_extract_severity_level(
+            S.stage_extract_protocol(S.stage_extract_routing(df))
+        )
+    )
+    rows = {r.Hostname: r for r in df.collect()}
+    for i, (msg, field, want) in enumerate(UNICODE_CASES):
+        r = rows[str(i)]
+        assert r[field] == want, (msg, field)
+        for f in ("routing", "protocol", "SeverityLevel", "Severity"):
+            assert r[f] == re_fields(msg)[f], (msg, f)
+
+
 def test_stage_cli_roundtrip(spark, tmp_path):
     """python -m juniper_syslog_filter_spark stage ... over CSV dirs."""
     from juniper_syslog_filter_spark.sinks import write_stage_csv
