@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from ..datagen import load_table
 from ..functions import text as T
 from ..operators import dedup as D
-from ..operators.graph import connected_components, dup_clusters
+from ..operators.graph import dup_clusters
 from .common import _LSH_CAND_CTE, query
 
 
@@ -109,9 +109,9 @@ _DUP_CC_SQL = f"""
 @query(oracle=_DUP_CC_SQL)
 def q_d6_dup_clusters(spark, sf_dir):
     """Duplicate-cluster closure: connected components over the d2
-    MinHash-LSH verified pair graph (min-label propagation, diameter-
-    bounded rounds — operators/graph.py), cluster id = component min,
-    is_keeper marks the canonical survivor."""
+    MinHash-LSH verified pair graph (alternating large-star/small-star,
+    O(log² n) rounds on any graph shape — operators/graph.py), cluster
+    id = component min, is_keeper marks the canonical survivor."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", threshold=0.5, n_bands=8, rows_per_band=2, k=8
@@ -181,33 +181,13 @@ def q_d5_simhash_hamming(spark, sf_dir):
     )
 
 
-# d12 produces the identical labelling as d6 (same pair graph, same
-# component-minimum contract) via a different distributed algorithm —
-# one recursive-CTE oracle checks both.
 @query(oracle=_DUP_CC_SQL)
 def q_d12_cc_star(spark, sf_dir):
-    """Duplicate-cluster closure via alternating large-star/small-star
-    (Kiveris et al. SoCC'14; operators/graph.connected_components with
-    algorithm="star") over the same MinHash-LSH verified pair graph as
-    d6 — the O(log² n)-round variant that stays fast on adversarial
-    long-chain graphs where d6's min-label propagation needs
-    O(diameter) rounds (tests/test_graph.py pins the round-count
-    separation on a 200-node path). Output contract and oracle are
-    identical to d6: the labelling is the same component-minimum
-    election, so the recursive-CTE oracle checks BOTH algorithms
-    value-exactly."""
-    d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(
-        d, "doc_id", "text", threshold=0.5, n_bands=8, rows_per_band=2, k=8
-    )
-    cc = connected_components(
-        pairs.select("id_a", "id_b"), "id_a", "id_b", algorithm="star"
-    )
-    return cc.select(
-        F.col("node").alias("doc_id"),
-        "cluster_id",
-        (F.col("node") == F.col("cluster_id")).alias("is_keeper"),
-    )
+    """Kept as a name only: the same query as d6 (``dup_clusters`` over
+    the same pair graph, large-star/small-star connected components),
+    checked by the same recursive-CTE oracle. Benchmarks and the
+    registry test probe it by this name."""
+    return q_d6_dup_clusters(spark, sf_dir)
 
 
 # d13: staged-CTE twin of operators/dedup.exact_substring_spans —
@@ -648,11 +628,11 @@ def q_wn2_winnow_overlap(spark, sf_dir):
 def q_cp3_fuzzy_dedup_corpus(spark, sf_dir):
     """End-to-end fuzzy-dedup corpus build — the pipeline every public
     web-corpus effort runs as its main pass: MinHash-LSH verified pairs
-    (d2 params) → connected-component clusters (d6) → keep the lowest
-    doc_id per cluster → per-source census of the surviving corpus.
-    Every stage is an already-oracle-checked operator; the composition
-    adds one anti-join (sized to non-keepers, i.e. the duplicate set,
-    not the corpus) and two partial aggregates."""
+    (d2 params) → large-star/small-star connected-component clusters
+    (d6) → keep the lowest doc_id per cluster → per-source census of
+    the surviving corpus. Every stage is an already-oracle-checked
+    operator; the composition adds one anti-join (sized to non-keepers,
+    i.e. the duplicate set, not the corpus) and two partial aggregates."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(
         d, "doc_id", "text", threshold=0.5, n_bands=8, rows_per_band=2, k=8

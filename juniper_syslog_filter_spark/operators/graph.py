@@ -8,49 +8,40 @@ threshold) survive. The reference repo has no graph surface (its
 dedup-free syslog pipeline never needs one); this operator belongs to
 the added training-data family, like the dedup/ANN modules.
 
-Algorithm: iterative min-label propagation expressed as DataFrame
-joins — every node starts labelled with itself; each round every node
-takes the min of its own label and its neighbours' labels; fixpoint =
-every node labelled with the smallest id reachable from it, i.e. the
-component minimum (the deterministic cluster id).
+Algorithm: alternating large-star/small-star (Kiveris, Lattanzi,
+Mirrokni, Rastogi, Vassilvitskii — "Connected Components in MapReduce
+and Beyond", SoCC'14, Algorithm 2 "Two-Phase") expressed as DataFrame
+aggregates and joins. Both phases re-wire edges toward smaller ids and
+preserve connectivity; the fixpoint is a disjoint star forest rooted at
+each component minimum (the deterministic cluster id).
 
 Scale design (the 100-TB lens):
 
-* Convergence is bounded by the component DIAMETER, not size. Near-dup
-  clusters in web corpora are dense and tiny (mirrors/boilerplate
-  families), so diameter is single-digit; ``max_iter`` defaults well
-  above that and the loop exits as soon as an iteration changes no
-  label.
-* Each round is ONE shuffle join (edges ⋈ labels on dst) + ONE
-  partial-aggregated ``groupBy(node)``. The self-loop message carries
-  each node's CURRENT label into that same aggregation, so the
-  convergence test (``min(label) != own label``) is a filter over the
-  already-materialized round output — no second join, no second
-  shuffle, one extra metadata-only job per round.
+* Convergence takes O(log² n) rounds on ANY graph shape, including
+  adversarial long chains (diameter ~ n), where label propagation
+  needs O(diameter) rounds. If ``max_iter`` rounds end without a
+  fixpoint, the call raises instead of returning a labelling that is
+  not the component minimum.
+* Each phase is one partial-aggregated grouped ``min`` plus one
+  co-partitioned join back; the fixpoint test (edge set unchanged) is
+  a count plus an empty anti-join — two graph-sized metadata jobs.
 * Shuffle width is sized to the GRAPH, not the session default: a
   verified dup-pair graph is orders of magnitude smaller than the
   corpus that produced it (477 nodes from 240 k docs at sf0.1), and a
   round over a few thousand edges must not pay 32 shuffle tasks of
-  scheduling overhead. One ``count`` on the checkpointed edge list
+  scheduling overhead. One ``count`` on the checkpointed pair list
   picks ``ceil(|E| / 200k)`` partitions, clamped to 4× cluster
   parallelism — at 100 TB the same rule widens the rounds to match the
   (still corpus-dwarfed) pair volume.
 * ``localCheckpoint`` truncates lineage each round; without it the
   plan doubles per iteration and the driver OOMs planning round ~15.
-  (Same rationale as dedup.py's signature materialization.)
-* For adversarial long-chain graphs (diameter ~ n) the published fix is
-  alternating large-star/small-star (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14), which converges in
-  O(log² n) rounds with the identical per-round join shape —
-  ``algorithm="star"`` selects it (:func:`_cc_star` below);
-  min-label propagation stays the default because dup graphs are
-  diameter-bounded and propagation's per-round constant is smaller
-  (one join vs two grouped phases).
-* The edge list is symmetrized + self-looped once up front; dedup
-  (``distinct``) keeps message volume at 2|E|+|V| per round.
+  (Same rationale as dedup.py's signature materialization.) Each
+  round's checkpoint blocks are unpersisted once consumed, so executor
+  block usage is O(1) in the round count.
 
-Oracle twin: a recursive CTE computing min-reachable-id over the same
-symmetrized edges (see driver_queries ``d6_dup_clusters``).
+Oracle twin: a recursive CTE computing min-reachable-id over the
+symmetrized pair list (``_DUP_CC_SQL`` in ``driver_queries/dedup.py``,
+shared by d6 and d12).
 """
 
 from __future__ import annotations
@@ -63,10 +54,11 @@ def _persistent_rdd_ids(spark) -> set:
     """Ids of every RDD currently persisted on this SparkContext.
 
     ``DataFrame.localCheckpoint`` persists an internal RDD but hands
-    back no handle to it, so per-round eviction in the star-CC loop is
-    done by diffing these snapshots (``JavaSparkContext
-    .getPersistentRDDs`` is the public Scala API surfaced through the
-    py4j gateway — there is no PySpark-level equivalent)."""
+    back no handle to it, so per-round eviction in the connected
+    components and PageRank loops is done by diffing these snapshots
+    (``JavaSparkContext.getPersistentRDDs`` is the public Scala API
+    surfaced through the py4j gateway — there is no PySpark-level
+    equivalent)."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k) for k in jmap.keySet().toArray()}
 
@@ -88,115 +80,14 @@ def connected_components(
     src_col: str,
     dst_col: str,
     max_iter: int = 25,
-    algorithm: str = "propagation",
-    rounds_out: list[int] | None = None,
 ) -> DataFrame:
-    """Close an undirected pair list into components.
+    """Close an undirected pair list into components with alternating
+    large-star/small-star rounds.
 
     Returns ``(node, cluster_id)`` — one row per distinct node appearing
     in ``pairs``, ``cluster_id`` = min node id in its component (a
-    deterministic canonical-keeper election).
-
-    ``algorithm``: ``"propagation"`` (default — min-label propagation,
-    O(diameter) rounds, one join per round) or ``"star"`` (alternating
-    large-star/small-star, Kiveris et al. SoCC'14 — O(log² n) rounds on
-    ANY graph shape, including adversarial long chains). Both return
-    the identical labelling. ``rounds_out``, if given a list, receives
-    the executed round count (for convergence diagnostics/tests).
-    """
-    if algorithm == "star":
-        return _cc_star(pairs, src_col, dst_col, max_iter, rounds_out)
-    if algorithm != "propagation":
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    spark = pairs.sparkSession
-    # Materialize the pair list ONCE before fanning it into the 4-way
-    # symmetrize union — each union branch re-evaluates its input, and
-    # the input here is typically a full near-dup detection (LSH join +
-    # verify), which must not run 4 times.
-    e = pairs.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).localCheckpoint()
-    # Symmetrize; self-loops make every node its own message source so
-    # singletons-in-pairs and labels survive rounds without an outer
-    # join — and give each round's aggregation the node's own current
-    # label, which doubles as the convergence signal below.
-    edges = (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .union(e.select(F.col("u").alias("u"), F.col("u").alias("v")))
-        .union(e.select(F.col("v").alias("u"), F.col("v").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    # Size per-round shuffles to the pair graph (see module docstring):
-    # the count is over already-checkpointed blocks, so it costs one
-    # metadata scan, not a recompute of the upstream pair detection.
-    n_edges = edges.count()
-    parts = max(
-        1,
-        min(4 * spark.sparkContext.defaultParallelism, n_edges // 200_000 + 1),
-    )
-    # Graph-sized shuffle widths via EXPLICIT per-plan repartition, not a
-    # session-conf mutation (racy if two queries share the session): the
-    # joins see both sides hash-partitioned (parts) on the join key and
-    # elide their exchanges; the per-round aggregation sits on a
-    # repartition(parts, node) whose partitioning it reuses, so every
-    # shuffle in the loop runs at `parts` width regardless of
-    # spark.sql.shuffle.partitions.
-    edges = edges.repartition(parts, "v").localCheckpoint()
-    labels = (
-        edges.select(F.col("u").alias("node"))
-        .repartition(parts, "node")
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # node <- min(label of every neighbour incl. itself); the
-        # self-loop row is tagged so the same aggregation also emits
-        # the node's previous label for the fixpoint test.
-        msgs = edges.join(
-            labels.repartition(parts, "node"),
-            edges["v"] == labels["node"],
-        ).select(
-            edges["u"].alias("node"),
-            F.col("label"),
-            (edges["u"] == edges["v"]).alias("is_self"),
-        )
-        agg = (
-            msgs.repartition(parts, "node")
-            .groupBy("node")
-            .agg(
-                F.min("label").alias("label"),
-                F.min(F.when(F.col("is_self"), F.col("label"))).alias(
-                    "_old"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = agg.where(F.col("label") != F.col("_old")).count()
-        labels = agg.select("node", "label")
-        if changed == 0:
-            break
-    if rounds_out is not None:
-        rounds_out.append(rounds)
-
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
-
-
-def _cc_star(
-    pairs: DataFrame,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-    rounds_out: list[int] | None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris,
-    Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected Components
-    in MapReduce and Beyond", SoCC'14, Algorithm 2 "Two-Phase").
+    deterministic canonical-keeper election). Raises ``RuntimeError``
+    when ``max_iter`` rounds end without a fixpoint.
 
     Per round, over the canonical edge set (big endpoint first):
 
@@ -206,18 +97,9 @@ def _cc_star(
     * **small-star(u)**: ``u`` and all its smaller neighbours are
       re-wired to ``m = min(smaller neighbours)``.
 
-    Both phases preserve connectivity and never increase the edge
-    count; the paper proves convergence to disjoint stars rooted at
-    each component minimum in O(log² n) rounds on any graph — this is
-    the scale path for adversarial long-chain graphs where min-label
-    propagation needs O(diameter) rounds.
-
-    Scale design: each phase is one grouped ``min`` (partial-agg,
-    map-side combined) + one co-partitioned join back, at a shuffle
-    width sized to the pair graph exactly as the propagation variant;
-    ``localCheckpoint`` per round truncates lineage. The fixpoint test
-    (edge set unchanged) is |new| == |old| plus an empty anti-join —
-    two graph-sized metadata jobs per round.
+    Both phases never increase the edge count; the paper proves
+    convergence to disjoint stars rooted at each component minimum in
+    O(log² n) rounds on any graph.
     """
     spark = pairs.sparkSession
     # Checkpoint-block hygiene: PySpark's DataFrame.localCheckpoint
@@ -266,21 +148,14 @@ def _cc_star(
     _unpersist_ids(spark, ids_b - ids_a)
     prev_edge_ids = ids_d - ids_c
 
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         # -- large-star: full neighbourhoods need both directions.
         # Exchange the symmetrized set ONCE and checkpoint it: both
         # consumers (the min aggregate and the join probe) reuse the
         # materialized HashPartitioning(u) — LogicalRDD preserves the
         # checkpointed partitioning, so neither inserts a new Exchange.
-        # Before this, sym was recomputed AND re-exchanged per branch
-        # (two shuffles of the doubled edge set per round). Measured at
-        # sf0.1 in-suite: 5.27 s (old, cross-window min) → 4.68 s — the
-        # saved exchange beats the added materialization job even at
-        # demo scale; at real scale the win grows with edge bytes (one
-        # network exchange + a node-local checkpoint write vs two
-        # network exchanges of the same data).
+        # One network exchange plus a node-local checkpoint write beats
+        # exchanging the doubled edge set once per consumer.
         ids_r0 = _persistent_rdd_ids(spark)
         sym = (
             edges.union(
@@ -336,8 +211,11 @@ def _cc_star(
         edges, prev_count = new_edges, new_count
         if unchanged:
             break
-    if rounds_out is not None:
-        rounds_out.append(rounds)
+    else:
+        _unpersist_ids(spark, (ids_c - ids_b) | prev_edge_ids)
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} rounds"
+        )
 
     # At the fixpoint the edge set is a disjoint star forest rooted at
     # each component minimum: (u, v) = (member, root). Roots and
@@ -463,6 +341,11 @@ def pagerank(
     DataFrame end to end.
     """
     spark = edges.sparkSession
+    # Checkpoint-block hygiene as in connected_components: e, nodes, p,
+    # dang and every round's ranks are eager checkpoints; a round's
+    # ranks are evicted once the next round's are materialized, and the
+    # inputs once the loop ends, so only the returned ranks stay live.
+    ids_a = _persistent_rdd_ids(spark)
     w = (F.col(weight).cast("double") if weight else F.lit(1.0)).alias("w")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w)
     e = e.localCheckpoint()
@@ -482,11 +365,6 @@ def pagerank(
         .repartition("src")
         .localCheckpoint()
     )
-    ranks = (
-        nodes.crossJoin(F.broadcast(n_df))
-        .select("node", (F.lit(1.0) / F.col("n")).alias("rank"))
-        .localCheckpoint()
-    )
     # Dangling (sink) node set: appears as a node but never as a src
     # with outgoing weight — computed once, node-sized.
     dang = (
@@ -496,6 +374,13 @@ def pagerank(
         if dangling
         else None
     )
+    ids_b = _persistent_rdd_ids(spark)
+    ranks = (
+        nodes.crossJoin(F.broadcast(n_df))
+        .select("node", (F.lit(1.0) / F.col("n")).alias("rank"))
+        .localCheckpoint()
+    )
+    rank_ids = _persistent_rdd_ids(spark) - ids_b
     for _ in range(iters):
         contrib = (
             p.join(ranks, p["src"] == ranks["node"])
@@ -518,6 +403,7 @@ def pagerank(
             )
         else:
             inflow = F.coalesce(F.col("cin"), F.lit(0.0))
+        ids_r = _persistent_rdd_ids(spark)
         ranks = (
             base.join(contrib, base["node"] == contrib["dst"], "left")
             .select(
@@ -528,4 +414,7 @@ def pagerank(
             )
             .localCheckpoint()
         )
+        _unpersist_ids(spark, rank_ids)
+        rank_ids = _persistent_rdd_ids(spark) - ids_r
+    _unpersist_ids(spark, ids_b - ids_a)
     return ranks

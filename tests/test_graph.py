@@ -2,12 +2,39 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from juniper_syslog_filter_spark.operators.graph import (
+    _persistent_rdd_ids,
     connected_components,
     dup_clusters,
 )
+
+
+def _path(spark, n):
+    return spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "id_a: long, id_b: long"
+    )
+
+
+def _union_find_labels(pairs):
+    """Pure-Python oracle: node -> min node id of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        # the smaller root wins, so every root is its tree's minimum
+        parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
 
 
 def _cc(spark, edges):
@@ -153,68 +180,58 @@ def test_pagerank_one_iter_equals_step(spark):
         assert abs(full[k] - step[k]) < 1e-9, (k, full[k], step[k])
 
 
-def test_star_matches_propagation(spark):
-    """algorithm='star' (large-star/small-star, Kiveris SoCC'14) must
-    produce the identical labelling as min-label propagation."""
-    edges = [(1, 2), (2, 3), (10, 11), (5, 2), (40, 41), (41, 42), (42, 40)]
-    df = spark.createDataFrame(edges, "id_a: long, id_b: long")
-    prop = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(df, "id_a", "id_b").collect()
-    }
-    star = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, "id_a", "id_b", algorithm="star"
-        ).collect()
-    }
-    assert star == prop
-    assert star[3] == 1 and star[5] == 1 and star[40] == 40
+_ids = st.integers(min_value=0, max_value=40)
+
+
+@given(
+    base=st.lists(st.tuples(_ids, _ids), min_size=1, max_size=30),
+    extra=st.lists(
+        st.tuples(st.sampled_from(["dup", "rev", "self"]), st.integers(0, 29)),
+        max_size=10,
+    ),
+    isolated=st.lists(st.integers(min_value=100, max_value=120), max_size=4),
+)
+@example(  # chain, a branch into it, a lone pair and a triangle
+    base=[(1, 2), (2, 3), (10, 11), (5, 2), (40, 41), (41, 42), (42, 40)],
+    extra=[],
+    isolated=[],
+)
+@settings(
+    max_examples=10, deadline=None, suppress_health_check=[HealthCheck.too_slow]
+)
+def test_star_matches_union_find(spark, base, extra, isolated):
+    """connected_components labels every node of a random pair list
+    with its component minimum, as a Python union-find does — across
+    self-pairs, duplicate and reversed pairs and isolated (x, x) nodes."""
+    pairs = list(base)
+    for op, i in extra:
+        a, b = base[i % len(base)]
+        pairs.append({"dup": (a, b), "rev": (b, a), "self": (a, a)}[op])
+    pairs += [(x, x) for x in isolated]
+    assert _cc(spark, pairs) == _union_find_labels(pairs)
 
 
 def test_star_self_pairs_and_singleton_nodes(spark):
-    """Self-pairs keep their node in the census; star must label them
-    with themselves (the propagation variant's self-loop behaviour)."""
-    df = spark.createDataFrame([(3, 3), (1, 2)], "id_a: long, id_b: long")
-    got = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, "id_a", "id_b", algorithm="star"
-        ).collect()
-    }
-    assert got == {3: 3, 1: 1, 2: 1}
+    """Self-pairs keep their node in the census, labelled with itself."""
+    assert _cc(spark, [(3, 3), (1, 2)]) == {3: 3, 1: 1, 2: 1}
 
 
 def test_star_converges_logarithmically_on_path(spark):
-    """Adversarial long chain (diameter = n): star needs O(log² n)
-    rounds where propagation needs O(n). On a 200-node path, star must
-    converge (correctly) within 12 rounds; propagation capped at the
-    same 12 rounds must NOT have finished labelling."""
+    """Adversarial long chain (diameter = n): large-star/small-star needs
+    O(log² n) rounds, so a 200-node path reaches its fixpoint within 12
+    rounds (no raise) and labels every node with 0."""
     n = 200
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a: long, id_b: long"
-    )
-    rounds: list[int] = []
-    star = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, "id_a", "id_b", max_iter=12, algorithm="star", rounds_out=rounds
-        ).collect()
+    rows = connected_components(_path(spark, n), "id_a", "id_b", max_iter=12)
+    assert {r["node"]: r["cluster_id"] for r in rows.collect()} == {
+        i: 0 for i in range(n)
     }
-    assert star == {i: 0 for i in range(n)}
-    assert rounds[0] <= 12, f"star took {rounds[0]} rounds on a {n}-path"
 
-    prop_rounds: list[int] = []
-    prop = {
-        r["node"]: r["cluster_id"]
-        for r in connected_components(
-            df, "id_a", "id_b", max_iter=12, rounds_out=prop_rounds
-        ).collect()
-    }
-    # label 0 moves one hop per round: after 12 rounds the far end of
-    # the chain cannot yet carry the component minimum.
-    assert prop[n - 1] != 0
-    assert prop_rounds[0] == 12
+
+def test_cc_raises_without_fixpoint(spark):
+    """Ending max_iter rounds short of the fixpoint must raise, naming
+    the round count, not return labels that are not component minima."""
+    with pytest.raises(RuntimeError, match="after 2 rounds"):
+        connected_components(_path(spark, 200), "id_a", "id_b", max_iter=2)
 
 
 def test_pagerank_dangling_mass_conserved(spark):
@@ -270,30 +287,42 @@ def test_pagerank_dangling_false_unchanged(spark):
 
 
 def test_star_evicts_checkpoint_blocks_per_round(spark):
-    """Round-4 advisor finding: each star round localCheckpoints three
-    edge-set copies (sym, ls, new_edges) and, before the fix, never
-    unpersisted them — executors accumulated O(rounds) blocks. After
-    convergence only the fixpoint edge set + node census (plus whatever
-    was persisted before the call) may remain."""
-    from juniper_syslog_filter_spark.operators.graph import (
-        _persistent_rdd_ids,
-    )
-
-    n = 200  # path graph → multiple star rounds
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "id_a: long, id_b: long"
-    )
+    """Each round localCheckpoints three edge-set copies (sym, ls,
+    new_edges); without eviction executors accumulate O(rounds) blocks.
+    After convergence only the fixpoint edge set + node census (plus
+    whatever was persisted before the call) may remain; a call that
+    raises leaves nothing."""
+    df = _path(spark, 200)
     before = _persistent_rdd_ids(spark)
-    rounds: list[int] = []
-    cc = connected_components(
-        df, "id_a", "id_b", algorithm="star", rounds_out=rounds
-    )
+    # precondition: the path needs more than 2 rounds
+    with pytest.raises(RuntimeError):
+        connected_components(df, "id_a", "id_b", max_iter=2)
+    assert _persistent_rdd_ids(spark) - before == set()
+    cc = connected_components(df, "id_a", "id_b")
     cc.count()  # materialize the returned plan
     leaked = _persistent_rdd_ids(spark) - before
-    assert rounds[0] >= 3, "path graph should need several rounds"
     # final edges + nodes = 2 live checkpoints; anything O(rounds) is
     # the leak this test guards against.
     assert len(leaked) <= 2, (
-        f"{len(leaked)} checkpointed RDDs survive {rounds[0]} rounds: "
-        f"{sorted(leaked)}"
+        f"{len(leaked)} checkpointed RDDs survive: {sorted(leaked)}"
+    )
+
+
+@pytest.mark.parametrize("dangling", [False, True])
+def test_pagerank_evicts_checkpoint_blocks(spark, dangling):
+    """pagerank checkpoints its inputs (edges, nodes, transition rows,
+    dangling set) and every round's ranks; once it returns only the
+    returned ranks may stay live, whatever the iteration count."""
+    from juniper_syslog_filter_spark.operators.graph import pagerank
+
+    df = spark.createDataFrame(
+        [("a", "b", 1.0), ("b", "c", 2.0), ("c", "a", 1.0), ("a", "d", 1.0)],
+        "src: string, dst: string, w: double",
+    )
+    before = _persistent_rdd_ids(spark)
+    ranks = pagerank(df, weight="w", iters=5, dangling=dangling)
+    assert ranks.count() == 4
+    leaked = _persistent_rdd_ids(spark) - before
+    assert len(leaked) <= 1, (
+        f"{len(leaked)} checkpointed RDDs survive: {sorted(leaked)}"
     )
